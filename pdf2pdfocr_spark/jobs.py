@@ -112,7 +112,7 @@ def run_dedup_job(
     for (round-3 verdict #7), one composed job:
 
         MinHash-LSH pairs ∪ SimHash near-dup pairs
-          → connected-component duplicate clusters (large-star/small-star)
+          → connected-component duplicate clusters (``duplicate_clusters``)
           → keep one representative per cluster (min doc_id)
           → deterministic stratified sample (optional, ``sample_k``/stratum)
           → token-budgeted shard packing
@@ -196,7 +196,7 @@ def run_dedup_job(
     pairs = mh.union(sh).distinct().persist()
     _mark("pairs", pairs)
 
-    clusters = dedup.duplicate_clusters(pairs)  # localCheckpoints internally
+    clusters = dedup.duplicate_clusters(pairs)
     clusters.write.mode("overwrite").parquet(f"{out_path}/clusters")
     clusters = spark.read.parquet(f"{out_path}/clusters")
     _mark("cc")

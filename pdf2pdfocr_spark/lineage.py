@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf2pdfocr_spark.schema import driver_frame
+
 LINEAGE_COLS = (
     "run_id", "doc_bucket", "min_doc_id", "max_doc_id",
     "n_docs", "n_spans", "status",
@@ -241,7 +243,7 @@ def write_checkpointed(
         mode="append",
     )
     # commit marker LAST: its presence certifies done_ids covers this run
-    spark.createDataFrame([(run_id,)], "run_id string").coalesce(1).write.mode(
+    driver_frame(spark, "run_id string", [[run_id]]).write.mode(
         "append"
     ).parquet(f"{out_path}/runs_committed")
     lineage_summary(landed).write.mode("append").parquet(f"{out_path}/lineage")
@@ -389,10 +391,12 @@ def write_metrics(
     batch, so these are progress/ops numbers; exact per-run doc/span counts
     come from the lineage table, which is derived from the committed output
     frame."""
-    rows = [(run_id, stage, int(v)) for stage, v in sorted(counts.items())]
+    stages = sorted(counts)
     (
-        spark.createDataFrame(rows, "run_id string, stage string, n long")
-        .coalesce(1)
+        driver_frame(
+            spark, "run_id string, stage string, n long",
+            [[run_id] * len(stages), stages, [int(counts[s]) for s in stages]],
+        )
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id")

@@ -21,6 +21,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf2pdfocr_spark.schema import driver_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -121,11 +123,10 @@ def _write_ann_meta(spark, path: str, kind: str, params: list) -> None:
     """Sidecar fingerprint next to the partitioned table (written through
     Spark so it lands on whatever filesystem the table does)."""
     (
-        spark.createDataFrame(
-            [(kind, _ann_fingerprint(kind, params))],
-            "kind string, fingerprint string",
+        driver_frame(
+            spark, "kind string, fingerprint string",
+            [[kind], [_ann_fingerprint(kind, params)]],
         )
-        .coalesce(1)
         .write.mode("overwrite")
         .json(f"{path}__ann_meta")
     )

@@ -901,7 +901,7 @@ FROM cand WHERE bit_count(xor(h_a, h_b)) <= 2
 
 def q_dedup_clusters(spark, sf_dir):
     """Pairwise near-dups → actionable groups: connected components over the
-    capped SimHash pair graph (min-label propagation, dedup.duplicate_clusters).
+    capped SimHash pair graph (dedup.duplicate_clusters).
     The DuckDB oracle computes the same clusters via a recursive-CTE
     transitive closure (min reachable id per node) — an engine-independent
     definition of the component labels."""
@@ -963,7 +963,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE doc_id <> cluster_id)
 def q_dedup_job_kept(spark, sf_dir):
     """The chained dedup job (jobs.run_dedup_job semantics) end-to-end as a
     single cross-engine-checked query: MinHash-LSH pairs ∪ SimHash pairs →
-    connected components (large-star/small-star) → keep one representative
+    connected components (``duplicate_clusters``) → keep one representative
     per cluster → whitespace token count → token-budget shard packing.
     The DuckDB twin recomputes every stage: same caps (band/chunk
     row_number), exact verification, recursive-CTE transitive closure,

@@ -408,3 +408,43 @@ def test_compact_done_ids_one_fileset_same_semantics(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bk_compact_input")
+
+
+def test_driver_built_frames_start_no_python_worker(spark, tmp_path, monkeypatch):
+    """Every driver-built frame (metrics ledger, commit marker, ANN sidecar,
+    driver-finished cluster labels) is an Arrow table read by the JVM: no
+    PythonRDD in its RDD lineage, so no Python worker starts for it. A
+    silent fallback to pickled rows would put one back."""
+    from pdf2pdfocr_spark import schema
+    from pdf2pdfocr_spark.operators import dedup, similarity
+
+    def lineage_of(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    # the check can see a Python worker when there is one
+    assert "PythonRDD" in lineage_of(
+        spark.createDataFrame([("r",)], "run_id string")
+    )
+    built = {}
+    for mod in (lineage, similarity, dedup):
+        def spy(*a, _mod=mod.__name__):
+            df = schema.driver_frame(*a)
+            built.setdefault(_mod, []).append(df)
+            return df
+        monkeypatch.setattr(mod, "driver_frame", spy)
+
+    out = str(tmp_path / "out")
+    _run(spark, corpus.synth_documents(4), out, run_id="run-1")
+    lineage.write_metrics(spark, out, "run-1", {"ocr_pages_in": 5})
+    similarity._write_ann_meta(spark, str(tmp_path / "ann"), "lsh",
+                               [[0.5, -0.5]])
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    dedup.duplicate_clusters(pairs).collect()
+
+    assert sorted(built) == sorted(
+        m.__name__ for m in (lineage, similarity, dedup)
+    )
+    assert len(built[lineage.__name__]) == 2  # marker + metrics
+    for frames in built.values():
+        for df in frames:
+            assert "PythonRDD" not in lineage_of(df)

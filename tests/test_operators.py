@@ -225,58 +225,179 @@ def test_multimodal_codec_decoder_real_image(spark):
     assert rows[0]["feature"] is not None and rows[0]["out_width"] == 16
 
 
-def test_duplicate_clusters_min_label(spark):
-    from pdf2pdfocr_spark.operators import dedup
+def _cc(pairs):
+    return {r["doc_id"]: r["cluster_id"]
+            for r in dedup.duplicate_clusters(pairs).collect()}
 
+
+def _force_star_rounds(monkeypatch):
+    """Push every graph through the large-star/small-star rounds: no edge
+    set is smaller than a zero bound, so neither driver exit fires."""
+    monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 0)
+
+
+# (pairs, expected labels) per graph shape; each shape is checked on the
+# default driver finish by its own test and on the star rounds by
+# test_duplicate_clusters_star_rounds
+CC_CASES = {
     # two components: {1,2,3,7} via chain 1-2, 2-3, 3-7; {10,11}
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 7), (10, 11)], "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
+    "min_label": (
+        [(1, 2), (2, 3), (3, 7), (10, 11)],
+        {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10},
+    ),
+    # Round-3 verdict #2: a chain-shaped pair graph (A~B~C~…, realistic
+    # template drift) has diameter = chain length; min-label propagation
+    # needed O(diameter) rounds and raised at max_iters=20. Large-star/
+    # small-star converges in O(log n) rounds — a 200-node chain (diameter
+    # 200) must resolve well under the default max_iters.
+    "chain": ([(i, i + 1) for i in range(200)], {i: 0 for i in range(201)}),
+    # Mixed shapes in one pair set: two disjoint chains + one dense clique
+    # — labels must be each component's min, nothing cross-contaminates.
+    "two_chains_and_dense": (
+        [(i, i + 1) for i in range(100, 140)]
+        + [(i, i + 1) for i in range(500, 520)]
+        + [(a, b) for a in range(900, 905) for b in range(a + 1, 905)],
+        {**{i: 100 for i in range(100, 141)},
+         **{i: 500 for i in range(500, 521)},
+         **{i: 900 for i in range(900, 905)}},
+    ),
+    "empty": ([], {}),
+}
+
+
+def _check_cc_case(spark, name):
+    rows, expect = CC_CASES[name]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    assert _cc(pairs) == expect
+
+
+def test_duplicate_clusters_min_label(spark):
+    _check_cc_case(spark, "min_label")
 
 
 def test_duplicate_clusters_chain_graph(spark):
-    """Round-3 verdict #2: a chain-shaped pair graph (A~B~C~…, realistic
-    template drift) has diameter = chain length; min-label propagation
-    needed O(diameter) rounds and raised at max_iters=20. Large-star/
-    small-star converges in O(log n) rounds — a 200-node chain (diameter
-    200) must resolve well under the default max_iters."""
-    from pdf2pdfocr_spark.operators import dedup
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
-    assert got == {i: 0 for i in range(201)}
+    _check_cc_case(spark, "chain")
 
 
 def test_duplicate_clusters_two_chains_and_dense(spark):
-    """Mixed shapes in one pair set: two disjoint chains + one dense clique
-    — labels must be each component's min, nothing cross-contaminates."""
-    from pdf2pdfocr_spark.operators import dedup
-
-    chain_a = [(i, i + 1) for i in range(100, 140)]
-    chain_b = [(i, i + 1) for i in range(500, 520)]
-    clique = [(a, b) for a in range(900, 905) for b in range(a + 1, 905)]
-    pairs = spark.createDataFrame(
-        chain_a + chain_b + clique, "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
-    expect = {i: 100 for i in range(100, 141)}
-    expect.update({i: 500 for i in range(500, 521)})
-    expect.update({i: 900 for i in range(900, 905)})
-    assert got == expect
+    _check_cc_case(spark, "two_chains_and_dense")
 
 
 def test_duplicate_clusters_empty_pairs(spark):
-    from pdf2pdfocr_spark.operators import dedup
+    _check_cc_case(spark, "empty")
 
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup.duplicate_clusters(pairs).count() == 0
+
+@pytest.mark.parametrize("name", sorted(CC_CASES))
+def test_duplicate_clusters_star_rounds(spark, monkeypatch, name):
+    """The four shapes above, with the driver finish disabled."""
+    _force_star_rounds(monkeypatch)
+    _check_cc_case(spark, name)
+
+
+def _py_components(rows):
+    """Reference labels: min id per connected component by repeated
+    relabelling to a fixed point; a NULL id joins nothing."""
+    label = {x: x for r in rows for x in r}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in rows:
+            if a is None or b is None:
+                continue
+            m = min(label[a], label[b])
+            for x in (a, b):
+                if label[x] != m:
+                    label[x], changed = m, True
+    return label
+
+
+def _random_pair_rows(seed, as_str):
+    """A seeded random graph: a few chains and cliques plus noise edges,
+    with self-pairs, duplicate and reversed pairs and one NULL id."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(10_000), 120)
+    rows = []
+    for k in range(0, 90, 15):
+        comp = ids[k:k + 15]
+        if k % 30:
+            rows += [(comp[i], comp[i + 1]) for i in range(len(comp) - 1)]
+        else:
+            rows += [(a, b) for a in comp[:6] for b in comp[:6] if a < b]
+    rows += [tuple(rng.sample(ids, 2)) for _ in range(10)]
+    rows += [(b, a) for a, b in rng.sample(rows, 8)]      # reversed
+    rows += rng.sample(rows, 8)                           # duplicate
+    rows += [(x, x) for x in ids[100:104]]                # self-pairs
+    rows += [(ids[110], None), (None, ids[111])]          # NULL id
+    rng.shuffle(rows)
+    if as_str:
+        rows = [tuple(None if x is None else f"d{x:05d}" for x in r)
+                for r in rows]
+    return rows
+
+
+@pytest.mark.parametrize("as_str", [False, True], ids=["long", "string"])
+@pytest.mark.parametrize("seed", [7, 8])
+def test_duplicate_clusters_paths_agree(spark, monkeypatch, seed, as_str):
+    """Up-front driver finish, mid-loop driver finish and pure star rounds
+    emit the same rows and schema, equal to a pure-Python union-find."""
+    rows = _random_pair_rows(seed, as_str)
+    pairs = spark.createDataFrame(
+        rows, "id_a string, id_b string" if as_str else "id_a long, id_b long"
+    )
+    calls = []
+    real = dedup._driver_labels
+    monkeypatch.setattr(dedup, "_driver_labels",
+                        lambda *a: calls.append(1) or real(*a))
+    out = {}
+    # bound = #pair rows: the up-front collect is not complete, but the
+    # distinct edges (no self/duplicate/reversed pairs) fall below it
+    for path, bound in [("up_front", None), ("mid_loop", len(rows)),
+                        ("star", 0)]:
+        if bound is not None:
+            monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", bound)
+        calls.clear()
+        df = dedup.duplicate_clusters(pairs)
+        got = df.collect()
+        assert len(calls) == (path != "star"), path
+        out[path] = (df.schema, sorted(map(tuple, got), key=repr))
+    assert out["up_front"] == out["mid_loop"] == out["star"]
+    expect = sorted(_py_components(rows).items(), key=repr)
+    assert out["star"][1] == expect
+
+
+def test_duplicate_clusters_null_and_empty_paths_agree(spark, monkeypatch):
+    """Empty input and an all-NULL pair: same rows and schema both ways."""
+    for rows in ([], [(None, None), (4, 4)]):
+        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+        driver = dedup.duplicate_clusters(pairs)
+        with monkeypatch.context() as m:
+            _force_star_rounds(m)
+            star = dedup.duplicate_clusters(pairs)
+        assert driver.schema == star.schema
+        assert sorted(driver.collect(), key=repr) == sorted(
+            star.collect(), key=repr
+        )
+    assert sorted(map(tuple, driver.collect()), key=repr) == [
+        (4, 4), (None, None)
+    ]
+
+
+def test_duplicate_clusters_job_count(spark):
+    """Fixed per-job cost, not data, dominates small graphs: the 200-edge
+    chain finishes on the driver in a handful of Spark jobs (the star
+    rounds alone launch over a hundred)."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(CC_CASES["chain"][0], "id_a long, id_b long")
+    group = "test_duplicate_clusters_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        got = _cc(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == CC_CASES["chain"][1]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 def test_stratified_sample_deterministic_and_bounded(spark):
