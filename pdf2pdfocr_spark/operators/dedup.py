@@ -21,6 +21,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,13 +30,14 @@ from pdf2pdfocr_spark.schema import driver_frame
 
 TOKEN_SPLIT_RE = r"\s+"
 
-# duplicate_clusters finishes on the driver below this many edges (see its
-# docstring). Sized from measured driver bytes per edge (tracemalloc peak of
-# the union-find plus the Arrow tables in and out, CPython 3.11): 191 B for
-# a chain of long ids, 285 B for a perfect matching of longs (two new nodes
-# per edge, the worst case), 381 B for a matching of 16-char string ids. At
-# 2^18 edges that is at most ~100 MB of driver memory and ~2 s of driver
-# time, against several Spark jobs per star round on any graph.
+# duplicate_clusters finishes on the driver below this many pair rows (see
+# its docstring). The bound is a driver memory cap, not a measured
+# crossover with the star rounds. Sized from measured driver bytes per edge
+# (tracemalloc peak of the union-find plus the Arrow tables in and out,
+# CPython 3.11): 191 B for a chain of long ids, 285 B for a perfect matching
+# of longs (two new nodes per edge, the worst case), 381 B for a matching of
+# 16-char string ids. At 2^18 edges that is at most ~100 MB of driver memory
+# and ~2 s of driver time.
 DRIVER_FINISH_EDGES = 1 << 18
 
 
@@ -520,9 +522,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return rewired.union(own).filter(F.col("u") != F.col("v")).distinct()
 
 
-def _driver_labels(spark, edges, id_field: T.StructField) -> DataFrame:
+def _driver_labels(spark, rows, id_field: T.StructField) -> DataFrame:
     """(doc_id, cluster_id) for every id in the two columns of the Arrow
-    table ``edges``: a min-label union-find in this process (path
+    table ``rows`` (pair rows): a min-label union-find in this process (path
     compression; the smaller root always wins, so every root is its
     component's minimum id). A NULL id is a node that joins nothing, as the
     star path's greatest/least edge form drops such pairs."""
@@ -536,7 +538,7 @@ def _driver_labels(spark, edges, id_field: T.StructField) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
+    for a, b in zip(rows.column(0).to_pylist(), rows.column(1).to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         if a is not None and b is not None:
@@ -551,38 +553,24 @@ def _driver_labels(spark, edges, id_field: T.StructField) -> DataFrame:
     return driver_frame(spark, schema, [ids, [find(x) for x in ids]])
 
 
-def _label_nodes(nodes: DataFrame, labels: DataFrame) -> DataFrame:
-    """Every node with its (doc_id, cluster_id) label; nodes without one are
-    component minima (or joined nothing) and label themselves."""
-    return nodes.join(labels, "doc_id", "left").select(
-        "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
-    )
-
-
 def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) where
     cluster_id = the MINIMUM doc_id reachable through the pair graph — the
     step that turns pairwise dedup output into actionable groups (keep one
     representative per cluster, drop the rest).
 
-    One decision, driven by the edge count: partition only when the input
+    One decision, driven by the pair count: partition only when the input
     repays the shuffle (*To Partition, or Not to Partition*, SIGMOD 2021).
-    Below ``DRIVER_FINISH_EDGES`` edges the graph is collected with
-    ``toArrow()`` and finished by a min-label union-find on the driver; the
-    labels come back as an Arrow-built frame (``schema.driver_frame``). Two
-    exits share that finish:
-
-    * **up front**: the pairs themselves are collected with a
-      ``limit(DRIVER_FINISH_EDGES)``; if fewer rows came back the graph is
-      complete on the driver and no Spark round runs (1 job on a
-      persisted pair frame, versus ~130 for the star rounds of a
-      200-edge chain); above the bound this collect is one extra read of
-      ``pairs`` — persist them, as ``run_dedup_job`` does, if they are
-      costly to recompute;
-    * **mid-loop**: every star round already collects its edge-set
-      signature (count + hash-sum); once that count drops below the bound
-      the checkpointed edges are collected and labelled on the driver, and
-      nodes that lost every edge keep their own id.
+    The pairs are collected with a ``limit(DRIVER_FINISH_EDGES)``
+    ``toArrow()``; if fewer rows came back the graph is complete on the
+    driver, a min-label union-find labels every node, and the labels come
+    back as an Arrow-built frame (``schema.driver_frame``). That is the
+    only driver exit, and no Spark round runs (1 job on a persisted pair
+    frame, versus ~130 for the star rounds of a 200-edge chain). Above the
+    bound the collect is discarded (at most 2^18 id pairs, 4 MB of Arrow
+    for long ids) and the rounds read the pairs again; pairs that are not
+    already persisted are persisted for the call, so their plan is not
+    computed twice, and released before returning.
 
     Above the bound — a 10^12-doc graph — the graph runs alternating
     large-star / small-star rounds (Kiveris et al.), which converge in
@@ -600,24 +588,38 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
 
     Input: (id_a, id_b [, ...]) pair rows. Output: (doc_id, cluster_id),
     one row per node that appears in any pair; a NULL id or a self-pair
-    labels itself. Both exits emit the same rows and schema.
+    labels itself. The driver finish and the star rounds emit the same rows
+    and schema.
     """
     spark = pairs.sparkSession
-    nodes = pairs.select(F.col("id_a").alias("doc_id")).union(
-        pairs.select(F.col("id_b").alias("doc_id"))
-    )
-    id_field = nodes.schema["doc_id"]
-    head = (
-        pairs.select(
-            F.col("id_a").cast(id_field.dataType),
-            F.col("id_b").cast(id_field.dataType),
+    owned = pairs.storageLevel == StorageLevel.NONE
+    if owned:
+        pairs = pairs.persist()
+    try:
+        nodes = pairs.select(F.col("id_a").alias("doc_id")).union(
+            pairs.select(F.col("id_b").alias("doc_id"))
         )
-        .limit(DRIVER_FINISH_EDGES)
-        .toArrow()
-    )
-    if head.num_rows < DRIVER_FINISH_EDGES:
-        return _driver_labels(spark, head, id_field)
+        id_field = nodes.schema["doc_id"]
+        head = (
+            pairs.select(
+                F.col("id_a").cast(id_field.dataType),
+                F.col("id_b").cast(id_field.dataType),
+            )
+            .limit(DRIVER_FINISH_EDGES)
+            .toArrow()
+        )
+        if head.num_rows < DRIVER_FINISH_EDGES:
+            return _driver_labels(spark, head, id_field)
+        return _star_rounds(nodes, pairs, max_iters)
+    finally:
+        if owned:
+            pairs.unpersist()
 
+
+def _star_rounds(nodes: DataFrame, pairs: DataFrame,
+                 max_iters: int) -> DataFrame:
+    """The large-star/small-star rounds of ``duplicate_clusters`` to the
+    star fixed point; the result no longer depends on ``pairs``."""
     nodes = nodes.distinct().localCheckpoint(eager=True)
     edges = (
         pairs.select(
@@ -639,18 +641,21 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
 
     sig = _sig(edges)
     for _ in range(max_iters):
-        if sig[0] < DRIVER_FINISH_EDGES:
-            return _label_nodes(
-                nodes, _driver_labels(spark, edges.toArrow(), id_field)
-            )
         after_large = _large_star(edges).localCheckpoint(eager=True)
         edges = _small_star(after_large).localCheckpoint(eager=True)
         sig_small = _sig(edges)
         if sig_small == sig and _sig(after_large) == sig:
-            # star fixed point: every non-root points directly at its
-            # component min; roots have no out-edge
+            # BOTH phases were no-ops — the paper's termination criterion,
+            # which holds only at the star fixed point (every non-root
+            # points directly at its component min; roots have no out-edge).
+            # Checking only the composition could stop on an L/S 2-cycle.
             labels = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
-            return _label_nodes(nodes, labels.withColumnRenamed("u", "doc_id"))
+            return nodes.join(
+                labels.withColumnRenamed("u", "doc_id"), "doc_id", "left"
+            ).select(
+                "doc_id",
+                F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
+            )
         sig = sig_small
     raise RuntimeError(
         f"duplicate_clusters did not converge in {max_iters} rounds — "

@@ -231,8 +231,8 @@ def _cc(pairs):
 
 
 def _force_star_rounds(monkeypatch):
-    """Push every graph through the large-star/small-star rounds: no edge
-    set is smaller than a zero bound, so neither driver exit fires."""
+    """Push every graph through the large-star/small-star rounds: no pair
+    set is smaller than a zero bound, so the driver finish never fires."""
     monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 0)
 
 
@@ -313,7 +313,7 @@ def _py_components(rows):
 
 def _random_pair_rows(seed, as_str):
     """A seeded random graph: a few chains and cliques plus noise edges,
-    with self-pairs, duplicate and reversed pairs and one NULL id."""
+    with self-pairs, duplicate and reversed pairs and NULL ids."""
     import random
 
     rng = random.Random(seed)
@@ -330,6 +330,7 @@ def _random_pair_rows(seed, as_str):
     rows += rng.sample(rows, 8)                           # duplicate
     rows += [(x, x) for x in ids[100:104]]                # self-pairs
     rows += [(ids[110], None), (None, ids[111])]          # NULL id
+    rows += [(None, None)]                                # all-NULL pair
     rng.shuffle(rows)
     if as_str:
         rows = [tuple(None if x is None else f"d{x:05d}" for x in r)
@@ -340,8 +341,11 @@ def _random_pair_rows(seed, as_str):
 @pytest.mark.parametrize("as_str", [False, True], ids=["long", "string"])
 @pytest.mark.parametrize("seed", [7, 8])
 def test_duplicate_clusters_paths_agree(spark, monkeypatch, seed, as_str):
-    """Up-front driver finish, mid-loop driver finish and pure star rounds
-    emit the same rows and schema, equal to a pure-Python union-find."""
+    """The driver finish and the star rounds emit the same rows and schema,
+    equal to a pure-Python union-find, and leave the caller's pair frame
+    unpersisted."""
+    from pyspark import StorageLevel
+
     rows = _random_pair_rows(seed, as_str)
     pairs = spark.createDataFrame(
         rows, "id_a string, id_b string" if as_str else "id_a long, id_b long"
@@ -351,37 +355,18 @@ def test_duplicate_clusters_paths_agree(spark, monkeypatch, seed, as_str):
     monkeypatch.setattr(dedup, "_driver_labels",
                         lambda *a: calls.append(1) or real(*a))
     out = {}
-    # bound = #pair rows: the up-front collect is not complete, but the
-    # distinct edges (no self/duplicate/reversed pairs) fall below it
-    for path, bound in [("up_front", None), ("mid_loop", len(rows)),
-                        ("star", 0)]:
-        if bound is not None:
-            monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", bound)
+    for path in ("driver", "star"):
+        if path == "star":
+            _force_star_rounds(monkeypatch)
         calls.clear()
         df = dedup.duplicate_clusters(pairs)
         got = df.collect()
-        assert len(calls) == (path != "star"), path
+        assert len(calls) == (path == "driver"), path
+        assert pairs.storageLevel == StorageLevel.NONE
         out[path] = (df.schema, sorted(map(tuple, got), key=repr))
-    assert out["up_front"] == out["mid_loop"] == out["star"]
+    assert out["driver"] == out["star"]
     expect = sorted(_py_components(rows).items(), key=repr)
     assert out["star"][1] == expect
-
-
-def test_duplicate_clusters_null_and_empty_paths_agree(spark, monkeypatch):
-    """Empty input and an all-NULL pair: same rows and schema both ways."""
-    for rows in ([], [(None, None), (4, 4)]):
-        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-        driver = dedup.duplicate_clusters(pairs)
-        with monkeypatch.context() as m:
-            _force_star_rounds(m)
-            star = dedup.duplicate_clusters(pairs)
-        assert driver.schema == star.schema
-        assert sorted(driver.collect(), key=repr) == sorted(
-            star.collect(), key=repr
-        )
-    assert sorted(map(tuple, driver.collect()), key=repr) == [
-        (4, 4), (None, None)
-    ]
 
 
 def test_duplicate_clusters_job_count(spark):
